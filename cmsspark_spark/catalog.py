@@ -17,6 +17,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
 from cmsspark_spark.session import tune
+from cmsspark_spark.sources.readers import read_parquet
 
 TABLES = [
     "region",
@@ -76,7 +77,7 @@ def load_table(
     that redistributes anyway — hence opt-in, measured per query.
     """
     tune(spark)
-    df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    df = read_parquet(spark, f"{sf_dir}/{name}.parquet")
     for c in NS_TIMESTAMP_COLS.get(name, []):
         dtype = dict(df.dtypes).get(c)
         if dtype == "bigint":

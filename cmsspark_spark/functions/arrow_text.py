@@ -104,7 +104,13 @@ def doc_term_postings_arrow(
                 }
             )
             counted = ft.group_by([d, t, dl]).aggregate([([], "count_all")])
-            counted = counted.rename_columns([d, t, dl, tf]).cast(out_schema)
+            # pyarrow versions differ in whether keys or aggregates come
+            # first in the output: select by name, not by position.
+            counted = (
+                counted.select([d, t, dl, "count_all"])
+                .rename_columns([d, t, dl, tf])
+                .cast(out_schema)
+            )
             for ob in counted.to_batches():
                 yield ob
 

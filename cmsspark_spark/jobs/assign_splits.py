@@ -37,6 +37,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
 from cmsspark_spark.session import get_spark
+from cmsspark_spark.sources.readers import read_parquet
 
 
 def run_batch(
@@ -218,8 +219,8 @@ def run_increment(
                 "rebuild the state or fix the scheduler's pin"
             )
 
-    census = spark.read.parquet(f"{state}/census")
-    splits = spark.read.parquet(f"{state}/splits")
+    census = read_parquet(spark, f"{state}/census")
+    splits = read_parquet(spark, f"{state}/splits")
     # ONE signature pass per increment: the band rows feed both the
     # assignment probe and the census commit (the commit used to
     # re-tokenize the increment — ~2s of duplicated HOF analysis +
@@ -285,7 +286,7 @@ def main() -> None:
         if not args.increment:
             ap.error("--increment is required in increment mode")
         run_increment(
-            spark, spark.read.parquet(args.increment), args.state,
+            spark, read_parquet(spark, args.increment), args.state,
             broadcast_increment=not args.no_broadcast_increment,
             expect_snapshot_version=args.expect_snapshot_version,
         )

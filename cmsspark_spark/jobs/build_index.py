@@ -27,6 +27,7 @@ import argparse
 
 from cmsspark_spark.operators import retrieval as R
 from cmsspark_spark.session import get_spark
+from cmsspark_spark.sources.readers import read_parquet
 
 
 def main(argv: list[str] | None = None) -> None:
@@ -81,7 +82,7 @@ def main(argv: list[str] | None = None) -> None:
             print(out)
         else:
             R.append_bm25_index(
-                spark.read.parquet(args.docs), args.index,
+                read_parquet(spark, args.docs), args.index,
                 id_col=args.id_col, text_col=args.text_col,
                 champions=args.champions,
             )
@@ -97,7 +98,7 @@ def main(argv: list[str] | None = None) -> None:
         if args.out:
             out.write.mode("overwrite").parquet(args.out)
             print({"out": args.out,
-                   "n_rows": spark.read.parquet(args.out).count()})
+                   "n_rows": read_parquet(spark, args.out).count()})
         else:
             print({"n_rows": out.count()})
     elif args.cmd == "compact":

@@ -33,6 +33,7 @@ from cmsspark_spark.operators.layout import (
     manifest_location,
     write_file_manifest,
 )
+from cmsspark_spark.sources.readers import read_parquet
 from cmsspark_spark.session import get_spark
 from cmsspark_spark.sinks import report
 
@@ -89,7 +90,7 @@ def run(
     # overlapping the rewrite, an in-place overwrite would delete
     # source files mid-read and surface as confusing executor task
     # failures instead of a clean error
-    if os.path.normpath(dest) == os.path.normpath(table):
+    if os.path.realpath(dest) == os.path.realpath(table):
         raise ValueError(
             f"dest must differ from table (got {table!r}): the rewrite "
             "never runs in place"
@@ -102,7 +103,7 @@ def run(
         # manifest-read cheap, not scan cheap
         mpath = manifest_location(table)
         try:
-            man = spark.read.parquet(mpath)
+            man = read_parquet(spark, mpath)
         except Exception:
             man = None  # no sidecar yet: proceed (first optimize)
         if man is not None and not compaction_candidates(
@@ -111,7 +112,7 @@ def run(
         ).take(1):
             return {"table": table, "dest": dest, "curve": curve,
                     "skipped": "healthy layout per manifest"}
-    df = spark.read.parquet(table)
+    df = read_parquet(spark, table)
 
     # The before-stats manifest (a scan+agg of the source layout) and
     # the clustered rewrite are independent Spark jobs — the rewrite
@@ -145,7 +146,7 @@ def run(
             # the rewritten files' FOOTERS (ranged reads, no data re-scan)
             # and doubles as the report's after-stats
             man_path = write_file_manifest(spark, dest, (x, y))
-            after_man = spark.read.parquet(man_path).toPandas()
+            after_man = read_parquet(spark, man_path).toPandas()
         before_man = f_before.result()
 
     before = _span_summary(before_man, x, y)

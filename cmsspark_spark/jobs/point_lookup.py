@@ -47,12 +47,13 @@ from cmsspark_spark.operators.layout import (
     manifest_location,
     pruned_files,
 )
+from cmsspark_spark.sources.readers import read_parquet
 from cmsspark_spark.session import get_spark
 
 
 def _try_read(spark: SparkSession, path: str) -> DataFrame | None:
     try:
-        return spark.read.parquet(path)
+        return read_parquet(spark, path)
     except Exception:
         return None
 
@@ -517,16 +518,16 @@ def run(
         plan["files_fallback_scanned"] = len(leftover)
         if leftover:
             hits = hits.unionByName(
-                spark.read.parquet(*leftover).filter(pred)
+                read_parquet(spark, *leftover).filter(pred)
             )
     if hits is None:
-        hits = spark.read.parquet(*paths).filter(pred)
+        hits = read_parquet(spark, *paths).filter(pred)
     if out:
         # count from the WRITTEN output — hits.count() after the write
         # would re-execute the whole pruned scan a second time
         hits.write.mode("overwrite").parquet(out)
         plan["out"] = out
-        plan["n_hits"] = spark.read.parquet(out).count()
+        plan["n_hits"] = read_parquet(spark, out).count()
     else:
         plan["n_hits"] = hits.count()
     return plan

@@ -32,6 +32,7 @@ from pyspark.sql import DataFrame, SparkSession
 from cmsspark_spark import sinks
 from cmsspark_spark.jobs.cms_replicas import rucio_ds_summary
 from cmsspark_spark.operators.memo import pin_frame
+from cmsspark_spark.sources.readers import read_parquet
 from cmsspark_spark.session import get_spark
 from cmsspark_spark.sinks import report
 from cmsspark_spark.sinks.osearch import OpenSearchSink
@@ -52,12 +53,12 @@ def load_sources(spark: SparkSession, src_dir: str) -> dict[str, DataFrame]:
     ``dbs_acquisition_eras`` is optional (the summary then reports
     AcquisitionEraName='UNKNOWN', matching the replica contract)."""
     out = {
-        name: spark.read.parquet(f"{src_dir}/{name}.parquet")
+        name: read_parquet(spark, f"{src_dir}/{name}.parquet")
         for name in SOURCE_TABLES
     }
     try:
-        out["dbs_acquisition_eras"] = spark.read.parquet(
-            f"{src_dir}/dbs_acquisition_eras.parquet"
+        out["dbs_acquisition_eras"] = read_parquet(
+            spark, f"{src_dir}/dbs_acquisition_eras.parquet"
         )
     except Exception:  # noqa: BLE001 — optional source
         pass

@@ -17,6 +17,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
 from cmsspark_spark.sinks import write_partitioned_parquet
+from cmsspark_spark.sources.readers import read_parquet
 
 
 def recompute_recent_partitions(
@@ -45,7 +46,7 @@ def recompute_recent_partitions(
 
 def read_curated(spark: SparkSession, table_path: str) -> DataFrame:
     """Read the full curated history (partition-pruned on filters)."""
-    return spark.read.option("basePath", table_path).parquet(table_path)
+    return read_parquet(spark, table_path, basePath=table_path)
 
 
 def ingest_increment_dedup(
@@ -81,7 +82,7 @@ def ingest_increment_dedup(
         .drop("_rn")
     )
     try:
-        seen = spark.read.parquet(corpus_path).select(fingerprint_col).distinct()
+        seen = read_parquet(spark, corpus_path).select(fingerprint_col).distinct()
         fresh = survivors.join(seen, on=fingerprint_col, how="left_anti")
     except AnalysisException:  # first run: empty store
         fresh = survivors
@@ -334,10 +335,8 @@ def read_curated_evolved(spark: SparkSession, table_path: str) -> DataFrame:
     the new columns as nulls — additive schema evolution without
     rewriting history (the parquet answer to the reference's per-era
     schema drift, spark_utils.py:550-566)."""
-    return (
-        spark.read.option("basePath", table_path)
-        .option("mergeSchema", "true")
-        .parquet(table_path)
+    return read_parquet(
+        spark, table_path, basePath=table_path, mergeSchema="true"
     )
 
 
@@ -399,8 +398,7 @@ def compact_partitions(
         nbytes = sum(os.path.getsize(os.path.join(pdir, f)) for f in files)
         n_out = max(1, math.ceil(nbytes / target_bytes))
         part = (
-            spark.read.option("basePath", table_path)
-            .parquet(pdir)
+            read_parquet(spark, pdir, basePath=table_path)
             .withColumn(day_col, F.col(day_col).cast("string"))
         )
         if cluster_by is not None:
@@ -499,7 +497,7 @@ def score_increment_span_dedup(
 
     base, spans = _increment_spans(increment, window, id_col, text_col)
     try:
-        seen = spark.read.parquet(census_path).select("_h").distinct()
+        seen = read_parquet(spark, census_path).select("_h").distinct()
         dup_counts = (
             spans.join(seen, on="_h", how="left_semi")
             .groupBy(id_col)
@@ -663,7 +661,7 @@ def score_increment_minhash_dedup(
         increment, n, num_hashes, rows_per_band, id_col, text_col
     ).localCheckpoint(eager=True)  # consumed by probe + self-join + commit
     try:
-        census = spark.read.parquet(census_path).select(
+        census = read_parquet(spark, census_path).select(
             F.col(id_col).alias("_bid"),
             "band",
             "band_sig",
@@ -758,7 +756,7 @@ def split_assign_increment(
     Inputs are the state a batch run already maintains: ``census`` is
     the committed MinHash band store (id, band, band_sig, sig — ~8
     longs per admitted doc, the ``commit_census_minhash`` contract;
-    pass ``spark.read.parquet(census_path)``), ``splits`` is the
+    pass ``read_parquet(spark, census_path)``), ``splits`` is the
     persisted (id, split) assignment of the admitted corpus (the
     batch operator's output — cluster-consistent, so ANY matched
     member's split equals its cluster representative's).

@@ -34,6 +34,8 @@ from typing import Sequence
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, Window
 
+from cmsspark_spark.sources.readers import read_parquet
+
 #: bits per dimension in the z-order key (two dims -> 2*BITS-bit key)
 ZORDER_BITS = 8
 
@@ -321,7 +323,7 @@ def rowgroup_bloom_manifest(
     offs = rowgroup_offsets(
         rowgroup_stats_manifest(spark, path, dims=(), files=files)
     )
-    src = spark.read.parquet(*(list(files) if files else [path]))
+    src = read_parquet(spark, *(list(files) if files else [path]))
     pos = bloom_positions(dim, m, k)
     data = src.select(
         F.substring_index(F.col("_metadata.file_path"), "/", -1).alias(
@@ -414,7 +416,7 @@ def read_rowgroups(
     unmapped schemes raise before tasks launch). ``columns`` prunes
     the read to the named columns (parquet is columnar — unread
     columns cost nothing). Schema comes from the table footer, so the
-    returned frame matches ``spark.read.parquet(path).select(cols)``.
+    returned frame matches ``read_parquet(spark, path).select(cols)``.
     """
     from urllib.parse import urlparse
 
@@ -433,7 +435,7 @@ def read_rowgroups(
             f"{missing[:5]}{'...' if len(missing) > 5 else ''} — rebuild "
             "the row-group sidecar after rewriting the table"
         )
-    src = spark.read.parquet(path)
+    src = read_parquet(spark, path)
     out_schema = src.select(*columns).schema if columns else src.schema
     cols = list(columns) if columns else [f.name for f in src.schema.fields]
     if not pairs:
@@ -780,10 +782,7 @@ def write_bloom_manifest(
     but only the ``files`` subset when given (the write paths pass
     exactly the files they just wrote: maintenance cost ∝ increment,
     the same discipline as the footer manifest)."""
-    reader = spark.read
-    src = (
-        reader.parquet(*files) if files else reader.parquet(data_path)
-    )
+    src = read_parquet(spark, *(files or [data_path]))
     dest = manifest_location(data_path) + "_bloom"
     # m/k recorded in the sidecar: a reader probing with different
     # parameters would compute wrong positions — false NEGATIVES, a
@@ -843,7 +842,7 @@ def append_with_manifest(
         # are false negatives; point_lookup rejects such sidecars).
         def _existing_mk(dest: str) -> tuple[int, int]:
             try:
-                side = spark.read.parquet(dest)
+                side = read_parquet(spark, dest)
             except Exception:
                 return BLOOM_M, BLOOM_K  # no sidecar yet
             if "bloom_m" not in side.columns or "bloom_k" not in side.columns:
@@ -1282,7 +1281,7 @@ def orphan_files(
     is read."""
     import time
 
-    manifest = spark.read.parquet(manifest_location(data_path))
+    manifest = read_parquet(spark, manifest_location(data_path))
     known = {r.file for r in manifest.select("file").distinct().collect()}
     fs, _ = _fs_for(spark, data_path)
     sc = spark.sparkContext

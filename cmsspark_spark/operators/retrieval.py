@@ -73,6 +73,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
 from cmsspark_spark.functions.text import tokens
+from cmsspark_spark.sources.readers import read_parquet
 
 
 def _state_table_exists(spark: SparkSession, path: str) -> bool:
@@ -200,7 +201,7 @@ def index_table(
                 "index (append an increment first)"
             )
         return None
-    return spark.read.parquet(*paths)
+    return read_parquet(spark, *paths)
 
 
 def _finalize_commit(
@@ -1442,7 +1443,7 @@ def compact_bm25_index(
     # live postings (tombstones applied) are the single source of
     # truth for the new base; stats/champions recomputed from them
     st["post"].write.mode("overwrite").parquet(f"{base}/postings")
-    live = spark.read.parquet(f"{base}/postings")
+    live = read_parquet(spark, f"{base}/postings")
     (
         live.groupBy("t")
         .agg(
@@ -1496,9 +1497,9 @@ def compact_bm25_index(
             )
         pos_raw.write.mode("overwrite").parquet(f"{base}/positions")
     after = {
-        "termstats_rows": spark.read.parquet(f"{base}/termstats").count(),
-        "champions_rows": spark.read.parquet(f"{base}/champions").count(),
-        "blockstats_rows": spark.read.parquet(f"{base}/blockstats")
+        "termstats_rows": read_parquet(spark, f"{base}/termstats").count(),
+        "champions_rows": read_parquet(spark, f"{base}/champions").count(),
+        "blockstats_rows": read_parquet(spark, f"{base}/blockstats")
         .count(),
         "globals_rows": 1,
     }

@@ -27,6 +27,7 @@ from cmsspark_spark.functions.vectors import (
     l2_norm,
     sign_buckets_arrow,
 )
+from cmsspark_spark.sources.readers import read_parquet
 
 
 #: (gateway id, element type, value bytes) → Column. Array-literal
@@ -506,7 +507,7 @@ def ivf_index_topk(
         F.col(vec_col).alias("_qvec"),
         F.explode(_probe_lists(vec_col, centroids, nprobe, impl)).alias("_centroid"),
     )
-    corpus = spark.read.option("basePath", index_path).parquet(index_path)
+    corpus = read_parquet(spark, index_path, basePath=index_path)
     cand = (
         corpus.join(F.broadcast(q), on="_centroid")
         .filter(F.col(id_col) != F.col(query_id_col))
@@ -584,7 +585,6 @@ def lsh_topk(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     query_id_col: str = "query_id",
-    impl: str = "arrow",
 ) -> DataFrame:
     """Approximate cosine top-k via sign-LSH bucketing + exact re-score.
 
@@ -592,7 +592,7 @@ def lsh_topk(
     of ``tables`` independent hash tables; only candidates get the exact
     cosine. Recall grows with ``tables`` and shrinks with ``num_planes``.
     Returns (query_id, vec_id, cosine, rank) like ``brute_force_topk``.
-    ``impl``: see ``cosine_near_pairs_lsh``.
+    Buckets come from the Arrow kernel (``sign_buckets_arrow``).
     """
 
     def _build() -> DataFrame:
@@ -603,22 +603,22 @@ def lsh_topk(
 
         def bucketize(df: DataFrame, out_id: str, out_vec: str) -> DataFrame:
             # ONE scan: every table's bucket in one array column (one UDF
-            # call or one expression tree), exploded narrowly — no
-            # union-of-branches re-reading the source.
+            # call), exploded narrowly — no union-of-branches re-reading
+            # the source.
             return df.select(
                 F.col(id_col).alias(out_id),
                 F.col(vec_col).alias(out_vec),
-                F.posexplode(_all_buckets(vec_col, all_planes, impl)).alias(
+                F.posexplode(sign_buckets_arrow(all_planes)(vec_col)).alias(
                     "_table", "_bucket"
                 ),
             )
 
         # the corpus-side hash tables are shared index STATE: one
-        # bucketize per (corpus, planes, impl) per session (r14)
+        # bucketize per (corpus, planes) per session (r14)
         corpus_all = _corpus_index_shared(
             corpus,
             ("lsh_buckets", id_col, vec_col, dim, num_planes, tables,
-             seed, impl),
+             seed),
             lambda: bucketize(corpus, id_col, vec_col),
         )
         query_all = bucketize(queries, query_id_col, "_qvec")
@@ -633,8 +633,7 @@ def lsh_topk(
 
     return _ann_topk_shared(
         "lsh", corpus, queries,
-        (dim, k, num_planes, tables, seed, id_col, vec_col, query_id_col,
-         impl),
+        (dim, k, num_planes, tables, seed, id_col, vec_col, query_id_col),
         _build,
     )
 
@@ -1409,7 +1408,7 @@ def load_kmeans_model(spark, path: str) -> tuple[list[list[int]], int, dict]:
     """(centroids, scale, {cluster: train_share}) from a stored model
     — a k-row parquet read, the only driver traffic serving needs."""
     rows = sorted(
-        spark.read.parquet(path).collect(), key=lambda r: r["cluster"]
+        read_parquet(spark, path).collect(), key=lambda r: r["cluster"]
     )
     cents = [list(r["centroid"]) for r in rows]
     scale = int(rows[0]["scale"]) if rows else 1000

@@ -71,6 +71,7 @@ from cmsspark_spark.operators.layout import (
     _list_parquet_files,
     _local_fs_path,
 )
+from cmsspark_spark.sources.readers import read_parquet
 
 SNAPDIR = "_snapshots"
 
@@ -753,7 +754,7 @@ def _compute_file_stats(
     (numbers, strings, bools); temporal or complex columns fail
     loudly — project them to epoch numbers before snapshotting."""
     root = table.rstrip("/")
-    df = spark.read.parquet(*[f"{root}/{n}" for n in names])
+    df = read_parquet(spark, *[f"{root}/{n}" for n in names])
     aggs = []
     for c in cols:
         aggs.append(F.min(c).alias(f"_lo_{c}"))
@@ -1261,7 +1262,7 @@ def read_staged(
     discard."""
     e = _staged_entry(spark, table, stage_id)
     root = table.rstrip("/")
-    inc = spark.read.parquet(*[f"{root}/{n}" for n in e["files"]])
+    inc = read_parquet(spark, *[f"{root}/{n}" for n in e["files"]])
     if e["op"] == "overwrite" or not list_snapshots(spark, table):
         return inc
     base = read_snapshot(spark, table)
@@ -1337,8 +1338,8 @@ def publish_staged(
                 extra["mixed_schemas"] = True
         extra["delete_key_cols"] = kc
         root = table.rstrip("/")
-        keys = spark.read.parquet(
-            *[f"{root}/{n}" for n in e["files"]]
+        keys = read_parquet(
+            spark, *[f"{root}/{n}" for n in e["files"]]
         ).select(*kc)
         # a crash between here and the commit leaves an unreferenced
         # snapdel file — ordinary vacuum residue; the re-publish
@@ -1449,8 +1450,8 @@ def _delete_keys_df(
     """Distinct key rows of the given delete files, broadcast-hinted
     only while their total on-disk size stays small."""
     root = table.rstrip("/")
-    del_df = spark.read.parquet(
-        *[f"{root}/{n}" for n in names]
+    del_df = read_parquet(
+        spark, *[f"{root}/{n}" for n in names]
     ).distinct()
     local = _local_fs_path(spark, root)
     total = 0
@@ -1496,16 +1497,14 @@ def _scan_with_deletes(
     unioned branches, each with ONE anti-join over the union of its
     applicable delete files — never a per-delete-file join chain."""
     root = table.rstrip("/")
-    reader = spark.read
     mixed = (
         meta.get("mixed_schemas") if merge_schema is None else merge_schema
     )
-    if mixed:
-        reader = reader.option("mergeSchema", "true")
+    opts = {"mergeSchema": "true"} if mixed else {}
     names = sorted(set(names))
     dels = _delete_entries(meta)
     if not dels:
-        return reader.parquet(*[f"{root}/{n}" for n in names])
+        return read_parquet(spark, *[f"{root}/{n}" for n in names], **opts)
     seqs = _live_name_seqs(spark, table, meta)
     dseq_list = [s for s, _ in dels]
     groups: dict = {}
@@ -1515,7 +1514,7 @@ def _scan_with_deletes(
     kc = list(meta["delete_key_cols"])
     parts = []
     for i in sorted(groups):
-        df = reader.parquet(*[f"{root}/{n}" for n in groups[i]])
+        df = read_parquet(spark, *[f"{root}/{n}" for n in groups[i]], **opts)
         applicable = [nm for _, nm in dels[i:]]
         if applicable:
             df = df.join(
@@ -1722,7 +1721,7 @@ def read_snapshot(
             )
         else:
             out = spark.createDataFrame(
-                [], spark.read.parquet(table).schema
+                [], read_parquet(spark, table).schema
             )
     else:
         out = _scan_with_deletes(spark, table, meta, live)
@@ -2952,7 +2951,7 @@ def maintain_snapshot_agg(
             fs.delete(
                 jvm.org.apache.hadoop.fs.Path(f"{root}/{old_data}"), True
             )
-        return spark.read.parquet(f"{root}/{data_rel}")
+        return read_parquet(spark, f"{root}/{data_rel}")
 
     meta = _read_agg_meta(spark, state_path)
     if meta is None:
@@ -2967,7 +2966,7 @@ def maintain_snapshot_agg(
         )
     last = int(meta["version"])
     data_rel = meta.get("data", "data")
-    state = spark.read.parquet(f"{root}/{data_rel}")
+    state = read_parquet(spark, f"{root}/{data_rel}")
     expected = set(group_cols) | {"n_rows"}
     expected |= {f"sum_{c}" for c in sum_cols}
     expected |= {f"sumsq_{c}" for c in sumsq_cols}

@@ -30,6 +30,7 @@ from cmsspark_spark.operators import joins as J
 from cmsspark_spark.operators import multimodal as M
 from cmsspark_spark.operators import similarity as S
 from cmsspark_spark.operators import sketches as K
+from cmsspark_spark.sources.readers import read_parquet
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
 QUERIES: dict[str, QueryFn] = {}
@@ -1602,7 +1603,7 @@ def stepchain_cpu_eff(spark: SparkSession, sf_dir: str) -> DataFrame:
 def file_provenance(spark: SparkSession, sf_dir: str) -> DataFrame:
     """S9 file-provenance column: derive source file from the scan
     (rucio_daily.py:39-48 input_file_name + substring_index)."""
-    n = spark.read.parquet(f"{sf_dir}/nation.parquet")
+    n = read_parquet(spark, f"{sf_dir}/nation.parquet")
     return (
         n.withColumn(
             "src_file", F.substring_index(F.input_file_name(), "/", -1)

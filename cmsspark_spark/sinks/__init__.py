@@ -20,6 +20,8 @@ from typing import Callable, Iterable, Iterator, Sequence
 
 from pyspark.sql import DataFrame
 
+from cmsspark_spark.sources.readers import read_parquet
+
 
 def write_csv(df: DataFrame, path: str, mode: str = "overwrite") -> None:
     """K1: header'd CSV (data_collection.py:91)."""
@@ -170,7 +172,7 @@ def write_training_shards(
     if max_records_per_file is not None:
         w = w.option("maxRecordsPerFile", int(max_records_per_file))
     w.partitionBy("_shard_id").parquet(path)
-    written = df.sparkSession.read.parquet(path)
+    written = read_parquet(df.sparkSession, path)
     return (
         written.groupBy(_F.col("_shard_id").cast("int").alias("shard_id"))
         .agg(
@@ -200,7 +202,7 @@ def read_training_shards(
     ``ValueError`` on mismatch."""
     import pyspark.sql.functions as _F
 
-    df = spark.read.option("basePath", path).parquet(path)
+    df = read_parquet(spark, path, basePath=path)
     if shard_ids is not None:
         df = df.filter(_F.col("_shard_id").isin([int(s) for s in shard_ids]))
     if manifest is not None:

@@ -21,6 +21,8 @@ from typing import Sequence
 import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame
 
+from cmsspark_spark.sources.readers import read_parquet
+
 
 def with_late_data_watermark(df: DataFrame, ts_col: str, delay: str = "1 day") -> DataFrame:
     """Event-time watermark bounding state for late data (T1: the
@@ -265,7 +267,7 @@ def streaming_count_min(
         spark = batch_df.sparkSession
         sk = count_min_build(batch_df, key_col, depth, width)
         try:
-            cur = spark.read.parquet(store_path)
+            cur = read_parquet(spark, store_path)
             merged = (
                 cur.unionByName(sk)
                 .groupBy("d", "bucket")
@@ -532,7 +534,7 @@ def minhash_gate_batch_fn(
         spark = bdf.sparkSession
         try:
             done = (
-                spark.read.parquet(census_path)
+                read_parquet(spark, census_path)
                 .filter(F.col("ingest_batch") == batch_id)
                 .limit(1)
                 .count()
@@ -592,7 +594,7 @@ def psi_drift_batch_fn(
         from cmsspark_spark.operators.pipeline import psi_against_reference
 
         spark = bdf.sparkSession
-        ref = spark.read.parquet(ref_path)
+        ref = read_parquet(spark, ref_path)
         out = psi_against_reference(bdf, ref, group_col, value_col)
         (
             out.withColumn("batch_id", F.lit(batch_id))
@@ -636,7 +638,7 @@ def quality_score_batch_fn(
 
         spark = bdf.sparkSession
         weights = [0.0] * (n_buckets + 1)
-        for r in spark.read.parquet(weights_path).collect():
+        for r in read_parquet(spark, weights_path).collect():
             weights[int(r["b"])] = float(r["weight"])
         feat = logreg_hashed_features(
             bdf, F.lit(False), text_col=text_col, id_col=id_col,
@@ -760,7 +762,7 @@ def kmeans_retrain_if_drifted(
 
     from cmsspark_spark.operators.similarity import save_kmeans_model
 
-    ledger = spark.read.parquet(drift_path)
+    ledger = read_parquet(spark, drift_path)
     last = (
         ledger.orderBy(SF.col("batch_id").desc()).limit(1).collect()
     )

@@ -7,6 +7,7 @@ sort rows, compare values exactly (both sides pre-round doubles).
 
 from __future__ import annotations
 
+import contextlib
 import math
 import os
 
@@ -50,6 +51,22 @@ def duck():
             )
     yield con
     con.close()
+
+
+@contextlib.contextmanager
+def jobs_submitted(spark):
+    """Count the Spark jobs submitted while the block runs, from the DAG
+    scheduler's next job id: ``with jobs_submitted(spark) as jobs: ...``
+    then ``jobs()``. Jobs from other threads count too."""
+    dag = spark.sparkContext._jsc.sc().dagScheduler()
+    start = dag.nextJobId()
+    end = None
+
+    def count() -> int:
+        return (dag.nextJobId() if end is None else end) - start
+
+    yield count
+    end = dag.nextJobId()
 
 
 def duck_schema_for(sf_dir: str) -> str:

@@ -4,6 +4,7 @@ dynamic partition overwrite, chunked document push."""
 
 from __future__ import annotations
 
+import contextlib
 import json
 from datetime import date
 
@@ -894,3 +895,212 @@ def test_kvlog_offset_signature_detects_prefix_swap(spark, tmp_path):
     # pre-signature checkpoints (no sig field) keep the old
     # count-only behavior instead of failing on upgrade
     assert len(rdr.partitions({"idx": 0}, {"idx": 2})) == 2
+
+
+# ---------------------------------------------------------------------------
+# read_parquet: footer-resolved schemas, no inference job
+# ---------------------------------------------------------------------------
+
+
+def _rows(df):
+    return sorted((tuple(r) for r in df.collect()), key=repr)
+
+
+def _assert_job_free_parity(spark, paths, **options):
+    """``read_parquet`` equals Spark's inferred read in schema (with
+    metadata) and rows, and submits no job while resolving."""
+    from cmsspark_spark.sources.readers import read_parquet
+    from tests.conftest import jobs_submitted
+
+    with jobs_submitted(spark) as jobs:
+        got = read_parquet(spark, *paths, **options)
+    want = spark.read.options(**options).parquet(*paths)
+    assert jobs() == 0
+    assert got.schema == want.schema
+    assert got.schema.json() == want.schema.json()
+    assert _rows(got) == _rows(want)
+    return got
+
+
+@pytest.mark.parametrize("table", [
+    "region", "nation", "customer", "supplier", "part",
+    "orders", "lineitem", "events", "documents", "embeddings",
+])
+def test_read_parquet_single_file_matches_inference(spark, table):
+    from tests.conftest import SF_SMOKE
+
+    _assert_job_free_parity(spark, [f"{SF_SMOKE}/{table}.parquet"])
+
+
+def test_read_parquet_nanos_timestamp_file(spark, tmp_path):
+    """TIMESTAMP(NANOS) maps to long under the session's nanosAsLong."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    path = str(tmp_path / "ns.parquet")
+    pq.write_table(pa.table({
+        "k": pa.array([1, 2], pa.int64()),
+        "ts": pa.array([1_000_000_001, 2_000_000_002], pa.timestamp("ns")),
+    }), path)
+    got = _assert_job_free_parity(spark, [path])
+    assert dict(got.dtypes)["ts"] == "bigint"
+
+
+def test_read_parquet_spark_written_layouts(spark, tmp_path):
+    """Flat, ``day=`` (read below the base with ``basePath``),
+    ``_shard_id=`` and multi-path reads of Spark-written directories."""
+    df = spark.range(40).selectExpr(
+        "id", "CAST(id AS STRING) AS s", "id % 3 AS day", "id % 4 AS _shard_id"
+    )
+    flat, daily, shards = (str(tmp_path / n) for n in ("flat", "daily", "shards"))
+    df.coalesce(2).write.parquet(flat)
+    df.write.partitionBy("day").parquet(daily)
+    df.write.partitionBy("_shard_id").parquet(shards)
+
+    _assert_job_free_parity(spark, [flat])
+    got = _assert_job_free_parity(spark, [f"{daily}/day=1"], basePath=daily)
+    assert "day" in got.columns
+    _assert_job_free_parity(spark, [shards])
+    _assert_job_free_parity(
+        spark, [f"{daily}/day=2", f"{daily}/day=0"], basePath=daily
+    )
+    _assert_job_free_parity(spark, [flat, f"{shards}/_shard_id=3"])
+
+
+def _write_siblings(spark, root, prefix=""):
+    """``x`` and ``x-y`` under ``root``, plus an empty ``a``: by name
+    ``x`` sorts first, by leaf path ``x-y/…`` does ('-' < '/'). The two
+    differ in schema, so the file Spark infers from is visible."""
+    spark.range(3).selectExpr("id AS a", "'v' AS b").write.parquet(
+        f"{root}/{prefix}x"
+    )
+    spark.range(3).selectExpr("id AS a").write.parquet(f"{root}/{prefix}x-y")
+    (root / f"{prefix}a").mkdir()
+    (root / f"{prefix}a" / "_SUCCESS").write_text("")
+
+
+def test_read_parquet_follows_leaf_path_order(spark, tmp_path):
+    """Partition directories ``k=x`` / ``k=x-y`` under one root, and
+    plain directories ``x`` / ``x-y`` as two roots."""
+    _write_siblings(spark, tmp_path / "parted", prefix="k=")
+    got = _assert_job_free_parity(spark, [str(tmp_path / "parted")])
+    assert got.columns == ["a", "k"]
+    plain = tmp_path / "plain"
+    _write_siblings(spark, plain)
+    got = _assert_job_free_parity(spark, [str(plain / "x"), str(plain / "x-y")])
+    assert got.columns == ["a"]
+    # the given order and a trailing slash do not move the first leaf
+    got = _assert_job_free_parity(spark, [str(plain / "x-y"), f"{plain}/x/"])
+    assert got.columns == ["a"]
+
+
+@contextlib.contextmanager
+def _session_conf(spark, conf):
+    """Set the session confs in ``conf`` for the block, then restore."""
+    old = {k: spark.conf.get(k, None) for k in conf}
+    try:
+        for k, v in conf.items():
+            spark.conf.set(k, v)
+        yield
+    finally:
+        for k, v in old.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
+
+
+def _same_outcome(spark, paths, conf=None, **options):
+    """``read_parquet`` gives Spark's schema, or Spark's error."""
+    from cmsspark_spark.sources.readers import read_parquet
+
+    def attempt(read):
+        try:
+            return read().schema
+        except Exception as e:  # noqa: BLE001 — the error IS the outcome
+            return type(e), getattr(e, "getCondition", lambda: None)()
+
+    with _session_conf(spark, conf or {}):
+        got = attempt(lambda: read_parquet(spark, *paths, **options))
+        want = attempt(lambda: spark.read.options(**options).parquet(*paths))
+    assert got == want
+    return got
+
+
+def test_read_parquet_defers_unmodelled_cases_to_spark(spark, tmp_path):
+    import shutil
+
+    root = tmp_path / "sib"
+    _write_siblings(spark, root, prefix="k=")
+    # schema merging, as an option or a conf
+    merged = _same_outcome(spark, [str(root)], mergeSchema="true")
+    assert merged.fieldNames() == ["a", "b", "k"]
+    merged = _same_outcome(
+        spark, [str(root)], conf={"spark.sql.parquet.mergeSchema": "true"}
+    )
+    assert merged.fieldNames() == ["a", "b", "k"]
+    # any option besides basePath; a glob
+    _same_outcome(spark, [str(root)], recursiveFileLookup="true")
+    _same_outcome(spark, [f"{root}/k=x*"], basePath=str(root))
+    # a summary file: Spark's inference prefers it over any data file
+    summ = tmp_path / "summ"
+    spark.range(3).selectExpr("id AS a").write.parquet(str(summ))
+    wide = next((root / "k=x").glob("part-*.parquet"))
+    shutil.copy(wide, summ / "_common_metadata")
+    assert _same_outcome(spark, [str(summ)]).fieldNames() == ["a", "b"]
+    # a data column that is also a partition directory key
+    part = tmp_path / "part" / "k=1"
+    spark.range(3).selectExpr("id AS a", "id AS k").write.parquet(str(part))
+    _same_outcome(spark, [str(tmp_path / "part")])
+    # Spark's own errors: missing path, empty directory, corrupt file,
+    # data only in non-partition subdirectories
+    (tmp_path / "empty").mkdir()
+    bad = tmp_path / "bad"
+    bad.mkdir()
+    (bad / "part-0.parquet").write_bytes(b"not a parquet file")
+    _write_siblings(spark, tmp_path / "plain")
+    for p in ("missing", "empty", "bad", "plain"):
+        assert isinstance(_same_outcome(spark, [str(tmp_path / p)]), tuple)
+
+
+def test_read_parquet_builds_the_inference_converter(spark, tmp_path):
+    """The converter takes five arguments from the session conf and
+    leaves variant annotations at the default whatever the conf says,
+    as inference does; a variant column reads alike under that conf."""
+    from cmsspark_spark.sources import readers
+
+    conf = spark._jsparkSession.sessionState().conf()
+    respect = spark._jvm.org.apache.spark.sql.internal.SQLConf \
+        .PARQUET_READER_RESPECT_UNKNOWN_TYPE_ANNOTATION().key()
+    flipped = not conf.parquetReaderRespectUnknownTypeAnnotation()
+    variant = str(tmp_path / "variant")
+    spark.sql("""SELECT 1 AS k, parse_json('{"a": 1}') AS v""").write.parquet(variant)
+    confs = {
+        "spark.sql.parquet.ignoreVariantAnnotation": "true",
+        respect: str(flipped).lower(),
+    }
+    with _session_conf(spark, confs):
+        conv = readers._inference_converter(readers._footer_jvm(spark._jvm), conf)
+        assert conv.ignoreVariantAnnotation() is False
+        assert conv.respectUnknownTypeAnnotation() is flipped
+    got = _same_outcome(spark, [variant], conf=confs)
+    assert got.simpleString() == "struct<k:int,v:variant>"
+
+
+def test_read_parquet_falls_back_when_a_jvm_member_is_missing(spark, monkeypatch):
+    """A JVM class or member this Spark lacks leaves the read to Spark's
+    own inference instead of failing it."""
+    from py4j.protocol import Py4JError
+
+    from cmsspark_spark.sources import readers
+    from tests.conftest import SF_SMOKE, jobs_submitted
+
+    def missing(jvm):
+        raise Py4JError("no such member")
+
+    monkeypatch.setattr(readers, "_footer_jvm", missing)
+    path = f"{SF_SMOKE}/nation.parquet"
+    with jobs_submitted(spark) as jobs:
+        got = readers.read_parquet(spark, path)
+    assert jobs() == 1  # Spark's own inference job
+    assert got.schema == spark.read.parquet(path).schema

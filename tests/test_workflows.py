@@ -758,6 +758,29 @@ def test_optimize_table_job_end_to_end(spark, tmp_path):
     assert os.path.exists(f"{out2}/manifest_before.csv")
 
 
+def test_optimize_table_refuses_symlinked_alias_of_table(spark, tmp_path):
+    """A dest that is a symlink to the table is the table: the in-place
+    guard resolves links, refuses before any Spark work, and the source
+    files survive."""
+    import os
+
+    import pytest
+
+    from cmsspark_spark.jobs import optimize_table
+
+    table = str(tmp_path / "tbl")
+    spark.range(100).selectExpr("id AS a", "id % 10 AS b").write.parquet(table)
+    alias = str(tmp_path / "alias")
+    os.symlink(table, alias)
+    before = sorted(os.listdir(table))
+
+    with pytest.raises(ValueError, match="never runs in place"):
+        optimize_table.run(spark, table, str(tmp_path / "rep"), "a", "b",
+                           dest=alias, n_files=2)
+    assert sorted(os.listdir(table)) == before
+    assert not os.path.exists(str(tmp_path / "rep"))
+
+
 def test_split_assign_increment_inherits_cluster_split(spark, tmp_path):
     """r9: the ingest-gate treatment for cluster-consistent splits —
     an appended near-dup inherits its cluster's split via the MinHash
